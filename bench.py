@@ -52,7 +52,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from shuttlestandalonedbcreator_spark.queries import CATALOG  # noqa: E402
-from shuttlestandalonedbcreator_spark.session import get_spark  # noqa: E402
+from shuttlestandalonedbcreator_spark.session import get_spark, graft_cpus  # noqa: E402
 
 HEADLINE = (
     "status_summary",
@@ -886,7 +886,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = graft_cpus()
     weather_start = load_weather()
 
     spark = get_spark(app_name="bench")

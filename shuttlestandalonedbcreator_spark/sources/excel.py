@@ -2,11 +2,12 @@
 
 Reference parity (file:line into /root/reference):
 - S2 XLSX scan: SAX streaming per sheet (SQLiteDirectImporter.java:330-379,
-  431-583). Here: each workbook's bytes arrive via Spark's `binaryFile`
-  source and are parsed inside `mapInPandas` executors with stdlib
-  zipfile+ElementTree — the engine parallelizes ACROSS workbooks (the
-  100 TB shape: many files), and the iterparse is streaming per sheet so
-  executor memory stays O(row), not O(sheet).
+  431-583). Here: Spark's `binaryFile` source lists the workbooks (paths
+  only, never their bytes) and each `mapInPandas` task opens and parses
+  its own files with stdlib zipfile+ElementTree — the engine
+  parallelizes ACROSS workbooks (the 100 TB shape: many files), and the
+  iterparse is streaming per sheet so executor memory stays O(row), not
+  O(sheet).
 - S4 sheet filter: name-prefix predicate (:349, :401).
 - S5 header skip: row 0 dropped per sheet (:469-473).
 - S9 sheet-projection sink: the `Overview` extraction re-expressed as a
@@ -27,17 +28,17 @@ reader and opens in Excel/LibreOffice; used by tests to generate fixtures
 
 from __future__ import annotations
 
-import io
-import os
 import zipfile
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
+from typing import BinaryIO
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.sources import numfmt
+from shuttlestandalonedbcreator_spark.sources.biff import parse_xls_rows
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -57,15 +58,16 @@ def _col_index(cell_ref: str) -> int:
 
 def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
     try:
-        data = zf.read("xl/sharedStrings.xml")
+        fh = zf.open("xl/sharedStrings.xml")
     except KeyError:
         return []
     out: list[str] = []
-    for _, si in ET.iterparse(io.BytesIO(data)):
-        if si.tag == f"{_NS}si":
-            # plain <t> or rich-text runs <r><t>
-            out.append("".join(t.text or "" for t in si.iter(f"{_NS}t")))
-            si.clear()
+    with fh:
+        for _, si in ET.iterparse(fh):
+            if si.tag == f"{_NS}si":
+                # plain <t> or rich-text runs <r><t>
+                out.append("".join(t.text or "" for t in si.iter(f"{_NS}t")))
+                si.clear()
     return out
 
 
@@ -120,9 +122,13 @@ def _load_styles(zf: zipfile.ZipFile) -> list[str]:
 
 
 def parse_xlsx_rows(
-    data: bytes, sheet_prefix: str | None = None, formatted: bool = False
+    source: BinaryIO,
+    sheet_prefix: str | None = None,
+    formatted: bool = False,
 ) -> Iterator[tuple[str, int, list[str]]]:
-    """Stream (sheet_name, row_index, cells) from workbook bytes.
+    """Stream (sheet_name, row_index, cells) from a workbook, given as a
+    seekable binary file. zipfile reads the central
+    directory, the shared strings and only the matching sheet parts.
 
     Default: cells are the raw stored strings (numbers keep their
     serialized form, e.g. '45123.5') — the tolerant-cast layer downstream
@@ -134,7 +140,7 @@ def parse_xlsx_rows(
     would (percent/currency/date masks).
     Sparse rows are padded positionally from cell refs (P2, :457-465).
     """
-    with zipfile.ZipFile(io.BytesIO(data)) as zf:
+    with zipfile.ZipFile(source) as zf:
         shared = _shared_strings(zf)
         styles = _load_styles(zf) if formatted else None
         for sheet_name, part in _sheet_parts(zf):
@@ -161,6 +167,38 @@ def parse_xlsx_rows(
                     row.clear()
 
 
+def _open_any(path: str) -> BinaryIO:
+    """Open a workbook for seekable binary reads where the task runs:
+    ``file:`` URIs and bare paths through stdlib ``open``, other URIs
+    (s3://, hdfs://, gs:// where the runtime supports them) through
+    ``pyarrow.fs``."""
+    if path.startswith("file:"):
+        path = path[5:]
+        while path.startswith("//"):
+            path = path[1:]
+    elif "://" in path:
+        import pyarrow.fs as pafs
+
+        fs, p = pafs.FileSystem.from_uri(path)
+        return fs.open_input_file(p)
+    return open(path, "rb")
+
+
+def parse_workbook(
+    path: str, sheet_prefix: str | None = None, formatted: bool = False
+) -> Iterator[tuple[str, int, list[str]]]:
+    """Open one workbook and stream (sheet_name, row_index, cells) from
+    its matching sheets — the one .xls/.xlsx dispatch, shared by the
+    mapInPandas scan and the `xlsx` DataSource. An .xlsx is parsed from
+    the open file (zipfile seeks to the parts it needs); a BIFF .xls is
+    one compound stream, so it is read whole."""
+    with _open_any(path) as fh:
+        if path.lower().endswith(".xls"):
+            yield from parse_xls_rows(fh.read(), sheet_prefix, formatted=formatted)
+        else:
+            yield from parse_xlsx_rows(fh, sheet_prefix, formatted=formatted)
+
+
 def read_workbook_rows(
     spark: SparkSession,
     path: str,
@@ -173,35 +211,36 @@ def read_workbook_rows(
     workbook under ``path`` → (_source_file, _sheet, _row_index,
     _cells array<string>).
 
-    Parallelism is per-workbook (binaryFile splits files across tasks);
-    within a file the sheet XML streams through iterparse AND the parsed
-    rows leave the task in ``chunk_rows``-sized Arrow batches — task
-    memory is O(chunk + workbook bytes), NOT O(workbook rows), matching
-    the reference's bounded-memory streaming-scan claim for 700 MB+
-    workbooks (SQLiteDirectImporter.java:330-379). S1 discovery (glob,
-    temp-file exclusion) rides on pathGlobFilter; `~*` lock files are
-    excluded like the reference's findExcelFiles (:226-248).
+    The JVM only lists the workbooks: the ``binaryFile`` read selects
+    ``path``, so its ``content`` column is pruned and no workbook's bytes
+    become a JVM row. Each task opens its own files (`parse_workbook`):
+    zipfile reads the central directory, the shared strings and the
+    matching sheet parts, the sheet XML streams through iterparse, and the
+    parsed rows leave the task in ``chunk_rows``-sized Arrow batches —
+    task memory is O(chunk + shared strings), NOT O(workbook bytes),
+    matching the reference's bounded-memory streaming-scan claim for
+    700 MB+ workbooks (SQLiteDirectImporter.java:330-379). Parallelism is
+    per workbook: binaryFile packs the listed files into tasks by size.
+    S1 discovery (glob, temp-file exclusion) rides on pathGlobFilter;
+    `~*` lock files are excluded like the reference's findExcelFiles
+    (:226-248).
     """
     # Executors may not have the repo on sys.path (the driver harness can
-    # import this module by file path) — serialize this module BY VALUE so
-    # the mapInPandas closure carries its own code.
+    # import this module by file path) — serialize the parse modules BY
+    # VALUE so the mapInPandas closure carries its own code.
     import shuttlestandalonedbcreator_spark.sources.biff as _biff_module
     import shuttlestandalonedbcreator_spark.sources.excel as _self_module
     import shuttlestandalonedbcreator_spark.sources.numfmt as _numfmt_module
     from pyspark.cloudpickle import register_pickle_by_value
 
-    register_pickle_by_value(_self_module)
-    register_pickle_by_value(_biff_module)
-    register_pickle_by_value(_numfmt_module)
-    # closure variable (not an executor-side import — the repo package may
-    # not be on executor sys.path; by-value pickling carries the code)
-    parse_xls = _biff_module.parse_xls_rows
+    for mod in (_biff_module, _self_module, _numfmt_module):
+        register_pickle_by_value(mod)
 
-    binary = (
+    paths = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
-        .select("path", "content")
+        .select("path")
         .filter(~F.element_at(F.split(F.col("path"), "/"), -1).startswith("~"))
     )
 
@@ -211,17 +250,11 @@ def read_workbook_rows(
         cols = ["_source_file", "_sheet", "_row_index", "_cells"]
         for pdf in batches:
             rows = []
-            for path_value, content in zip(pdf["path"], pdf["content"]):
-                if str(path_value).lower().endswith(".xls"):
-                    gen = parse_xls(
-                        bytes(content), sheet_prefix, formatted=formatted
-                    )
-                else:
-                    gen = parse_xlsx_rows(
-                        bytes(content), sheet_prefix, formatted=formatted
-                    )
-                fname = str(path_value).rsplit("/", 1)[-1]
-                for sheet, row_idx, cells in gen:
+            for path_value in pdf["path"]:
+                fname = path_value.rsplit("/", 1)[-1]
+                for sheet, row_idx, cells in parse_workbook(
+                    path_value, sheet_prefix, formatted
+                ):
                     rows.append((fname, sheet, row_idx, cells))
                     if len(rows) >= chunk_rows:
                         # bound task memory: flush a chunk mid-workbook
@@ -231,228 +264,29 @@ def read_workbook_rows(
                 yield pd.DataFrame(rows, columns=cols)
 
     schema = "_source_file string, _sheet string, _row_index int, _cells array<string>"
-    return binary.mapInPandas(parse_partition, schema=schema)
-
-
-def parse_one_sheet(
-    data: bytes, sheet_name: str, part: str
-) -> Iterator[tuple[str, int, list[str]]]:
-    """Stream (sheet_name, row_index, cells) for a SINGLE sheet part —
-    the unit of work for the sheet-parallel scan."""
-    with zipfile.ZipFile(io.BytesIO(data)) as zf:
-        shared = _shared_strings(zf)
-        row_idx = 0
-        with zf.open(part) as fh:
-            for _, row in ET.iterparse(fh):
-                if row.tag != f"{_NS}row":
-                    continue
-                cells: list[str] = []
-                for cell in row.iter(f"{_NS}c"):
-                    ref = cell.get("r")
-                    pos = _col_index(ref) if ref else len(cells)
-                    while len(cells) < pos:
-                        cells.append("")
-                    value = _cell_value(cell, shared)
-                    if pos < len(cells):
-                        cells[pos] = value
-                    else:
-                        cells.append(value)
-                yield sheet_name, row_idx, cells
-                row_idx += 1
-                row.clear()
-
-
-class _HadoopRangedFile(io.RawIOBase):
-    """Read-only seekable file over the Hadoop FS API (py4j), so stdlib
-    ``zipfile`` can do RANGED reads — central directory, workbook.xml —
-    against ANY configured filesystem (file://, hdfs://, s3a://, ...)
-    without downloading the workbook. Driver-side metadata path only;
-    bulk sheet bytes are read executor-side."""
-
-    def __init__(self, jvm, jfs, jpath, size: int):
-        self._jvm = jvm
-        self._in = jfs.open(jpath)
-        self._size = size
-        self._pos = 0
-
-    def readable(self) -> bool:
-        return True
-
-    def seekable(self) -> bool:
-        return True
-
-    def seek(self, offset: int, whence: int = 0) -> int:
-        if whence == 0:
-            pos = offset
-        elif whence == 1:
-            pos = self._pos + offset
-        else:
-            pos = self._size + offset
-        self._pos = max(0, min(pos, self._size))
-        self._in.seek(self._pos)
-        return self._pos
-
-    def tell(self) -> int:
-        return self._pos
-
-    def read(self, n: int = -1) -> bytes:
-        if n < 0 or self._pos + n > self._size:
-            n = self._size - self._pos
-        if n <= 0:
-            return b""
-        data = bytes(
-            self._jvm.org.apache.commons.io.IOUtils.toByteArray(self._in, n)
-        )
-        self._pos += len(data)
-        return data
-
-    def readinto(self, b) -> int:  # BufferedReader's actual entry point
-        data = self.read(len(b))
-        b[: len(data)] = data
-        return len(data)
-
-    def close(self) -> None:
-        try:
-            self._in.close()
-        finally:
-            super().close()
-
-
-def _hadoop_glob_files(spark: SparkSession, path: str, glob: str):
-    """(jvm, jfs, [(jpath, uri_str, length), ...]) for the workbooks under
-    ``path`` via the Hadoop FS API — same visibility as binaryFile."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    hconf = sc._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    jfs = jpath.getFileSystem(hconf)
-    status = jfs.getFileStatus(jpath)
-    if status.isDirectory():
-        pattern = jvm.org.apache.hadoop.fs.Path(jpath, glob)
-        listing = jfs.globStatus(pattern) or []
-    else:
-        listing = [status]
-    out = []
-    for st in sorted(listing, key=lambda s: str(s.getPath())):
-        p = st.getPath()
-        if p.getName().startswith("~"):
-            continue  # S1 temp-lock exclusion, same as the per-file scan
-        out.append((p, str(p.toUri()), st.getLen()))
-    return jvm, jfs, out
-
-
-def _read_bytes_any(path: str) -> bytes:
-    """Executor-side whole-file read for local paths AND object-store
-    URIs (pyarrow.fs resolves s3://, hdfs://, gs:// where the runtime
-    supports them; file: URIs and bare paths stay stdlib)."""
-    if path.startswith("file:"):
-        local = path[5:]
-        while local.startswith("//"):
-            local = local[1:]
-        with open(local, "rb") as fh:
-            return fh.read()
-    if "://" in path:
-        import pyarrow.fs as pafs
-
-        fs, p = pafs.FileSystem.from_uri(path)
-        with fs.open_input_stream(p) as fh:
-            return fh.read()
-    with open(path, "rb") as fh:
-        return fh.read()
-
-
-def read_workbook_rows_sheet_parallel(
-    spark: SparkSession,
-    path: str,
-    sheet_prefix: str | None = None,
-    glob: str = "*.xlsx",
-    chunk_rows: int = 50_000,
-) -> DataFrame:
-    """`read_workbook_rows` with per-SHEET task granularity — the scan
-    for the reference's headline case: ONE huge multi-sheet workbook
-    (SQLiteDirectImporter.java:330-379 processes it on a single thread;
-    the per-FILE scan caps parallelism at the file count). The driver
-    reads only each workbook's central directory + workbook.xml (KBs of
-    RANGED reads through the Hadoop FS API — object-store visible, same
-    filesystems as binaryFile), builds the (file, sheet, part) work
-    list, and repartitions it so every SHEET parses in its own task.
-
-    Trade-off vs the per-file scan: each task re-opens the workbook from
-    its URI (the sharedStrings table is re-parsed per sheet), so this
-    wins when sheets are large and few files dominate; the per-file scan
-    wins on many small workbooks. XLSX only (a BIFF .xls is one stream —
-    it cannot split by sheet without a full scan).
-
-    Output contract is identical to read_workbook_rows.
-    """
-    import shuttlestandalonedbcreator_spark.sources.excel as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
-
-    jvm, jfs, files = _hadoop_glob_files(spark, path, glob)
-    work: list[tuple[str, str, str]] = []
-    for jp, uri, size in files:
-        ranged = io.BufferedReader(_HadoopRangedFile(jvm, jfs, jp, size))
-        with zipfile.ZipFile(ranged) as zf:
-            for sheet_name, part in _sheet_parts(zf):
-                if sheet_prefix is not None and not sheet_name.startswith(
-                    sheet_prefix
-                ):
-                    continue
-                work.append((uri, sheet_name, part))
-    if not work:
-        return spark.createDataFrame(
-            [], "_source_file string, _sheet string, _row_index int, _cells array<string>"
-        )
-    work_df = spark.createDataFrame(
-        work, "_path string, _sheet_name string, _part string"
-    ).repartition(len(work))
-
-    def parse_sheets(batches):
-        import pandas as pd
-
-        cols = ["_source_file", "_sheet", "_row_index", "_cells"]
-        for pdf in batches:
-            rows = []
-            for p, sheet_name, part in zip(
-                pdf["_path"], pdf["_sheet_name"], pdf["_part"]
-            ):
-                data = _read_bytes_any(str(p))
-                fname = str(p).rsplit("/", 1)[-1]
-                for sheet, row_idx, cells in parse_one_sheet(
-                    data, str(sheet_name), str(part)
-                ):
-                    rows.append((fname, sheet, row_idx, cells))
-                    if len(rows) >= chunk_rows:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = "_source_file string, _sheet string, _row_index int, _cells array<string>"
-    return work_df.mapInPandas(parse_sheets, schema=schema)
+    return paths.mapInPandas(parse_partition, schema=schema)
 
 
 def read_transfer_reports(
     spark: SparkSession,
     path: str,
     sheet_prefix: str = "Transfer Report",
-    parallel: bool = False,
 ) -> DataFrame:
     """The reference's ingest scan (S1-S5): matching sheets, header row
     dropped, cells mapped POSITIONALLY onto the 19 RAW_COLUMNS (headers
     captured but never validated, :469-472, :511-513), short rows padded
     with '' (:512). Feed the result to plans.transfer_pipeline.ingest.
 
-    ``parallel=True`` scans per SHEET instead of per file
-    (`read_workbook_rows_sheet_parallel`) — the shape for ONE huge
-    multi-sheet workbook (xlsx only); projection rules are identical, so
-    capacity rehearsals measure exactly the production mapping."""
+    ``_ingest_seq`` is the arrival order the upsert's last-write-wins
+    follows. Within a workbook it is sheet order, then row order, so a
+    retry listed on a later sheet wins. Across workbooks it is the order
+    binaryFile packs the files into tasks: largest first. On the seed-1
+    benchmark input, Job03 (440,543 B) arrived first and Job00
+    (426,465 B) last. Like the reference's unsorted directory listing
+    (:170-200), that order is not name order."""
     from shuttlestandalonedbcreator_spark.plans.transfer_pipeline import RAW_COLUMNS
 
-    scan = read_workbook_rows_sheet_parallel if parallel else read_workbook_rows
-    raw = scan(spark, path, sheet_prefix=sheet_prefix)
+    raw = read_workbook_rows(spark, path, sheet_prefix=sheet_prefix)
     no_header = raw.filter(F.col("_row_index") > 0)  # S5 per sheet
     cols = [
         # F.get (not getItem) → NULL past the end under ANSI; '' via coalesce
@@ -462,8 +296,7 @@ def read_transfer_reports(
     return no_header.select(
         *cols,
         F.col("_source_file"),
-        # global arrival order: workbook, then sheet, then row — the
-        # reference processes files sequentially (:170-200)
+        # global arrival order: workbook, then sheet, then row
         F.monotonically_increasing_id().alias("_ingest_seq"),
     )
 

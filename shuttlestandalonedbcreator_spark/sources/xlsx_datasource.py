@@ -54,8 +54,7 @@ from pyspark.sql.datasource import (
 # re-enter the import machinery with no repo on sys.path (NOTES.md fact
 # #4). As module-level globals of a by-value-registered module, these
 # function objects travel inside the pickled class instead.
-from shuttlestandalonedbcreator_spark.sources.biff import parse_xls_rows
-from shuttlestandalonedbcreator_spark.sources.excel import parse_xlsx_rows, write_workbook
+from shuttlestandalonedbcreator_spark.sources.excel import parse_workbook, write_workbook
 
 RAW_SCHEMA = "_source_file string, _sheet string, _row_index int, _cells array<string>"
 
@@ -85,15 +84,8 @@ class XlsxReader(DataSourceReader):
         return [_WorkbookPartition(p) for p in files]
 
     def read(self, partition: _WorkbookPartition):
-        with open(partition.path, "rb") as fh:
-            data = fh.read()
-        parse = (
-            parse_xls_rows
-            if partition.path.lower().endswith(".xls")
-            else parse_xlsx_rows
-        )
         fname = os.path.basename(partition.path)
-        for sheet, row_idx, cells in parse(data, self.sheet_prefix):
+        for sheet, row_idx, cells in parse_workbook(partition.path, self.sheet_prefix):
             yield (fname, sheet, row_idx, cells)
 
 

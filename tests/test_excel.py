@@ -27,12 +27,14 @@ def _report_rows(rows):
 def workbook_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("workbooks")
     r1 = ["/A", "", "", "10"] + [""] * 15
-    r2 = ["/A/f1.pdf", "100", "90", "11"] + [""] * 11 + ["success", "", "", ""]
+    r2 = ["/A/f1.pdf", "100", "90", "11"] + [""] * 11 + ["failed", "", "", ""]
     short = ["/A/short.pdf", "5", "", "12"]  # trailing cells absent
+    # the same key listed again on the later sheet: this retry must win
+    retry = r2[:15] + ["success", "", "", ""]
     write_workbook(
         {
             "Transfer Report 1": _report_rows([r1, r2]),
-            "Transfer Report 2": _report_rows([short]),
+            "Transfer Report 2": _report_rows([short, retry]),
             "Overview": [["summary", "ignored"], ["x", "y"]],
         },
         str(d / "JobA.xlsx"),
@@ -53,9 +55,19 @@ def test_raw_scan_sheets_and_rows(spark, workbook_dir):
     # Overview filtered out; ~lock.xlsx skipped; header rows still counted here
     assert by_key == {
         ("JobA.xlsx", "Transfer Report 1"): 3,
-        ("JobA.xlsx", "Transfer Report 2"): 2,
+        ("JobA.xlsx", "Transfer Report 2"): 3,
         ("JobB.xlsx", "Transfer Report"): 2,
     }
+
+
+def test_scan_never_ships_workbook_bytes_through_the_jvm(spark, workbook_dir):
+    """The binaryFile read lists paths only: its `content` column is
+    pruned from the scan, so a workbook of any size never becomes one JVM
+    row — each task opens its own files instead."""
+    df = read_transfer_reports(spark, workbook_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (scan,) = [line for line in plan.splitlines() if "FileScan binaryFile" in line]
+    assert scan.endswith("ReadSchema: struct<path:string>")
 
 
 def test_raw_scan_chunked_flush_preserves_rows(spark, workbook_dir):
@@ -76,9 +88,12 @@ def test_raw_scan_chunked_flush_preserves_rows(spark, workbook_dir):
 
 def test_transfer_scan_positional_and_padding(spark, workbook_dir):
     df = read_transfer_reports(spark, workbook_dir)
-    rows = {r["file_name"]: r for r in df.collect()}
-    assert len(rows) == 4  # headers dropped per sheet
-    assert rows["/A/f1.pdf"]["file_status"] == "success"  # position 15
+    collected = df.collect()
+    assert len(collected) == 5  # headers dropped per sheet
+    rows = {r["file_name"]: r for r in collected}
+    assert sorted(
+        r["file_status"] for r in collected if r["file_name"] == "/A/f1.pdf"
+    ) == ["failed", "success"]  # position 15
     assert rows["/A/short.pdf"]["errors"] == ""  # short row padded with ''
     assert rows["/A/short.pdf"]["target_file_id"] == "12"
     assert rows["/B/f9.pdf"]["_source_file"] == "JobB.xlsx"
@@ -91,6 +106,16 @@ def test_excel_to_pipeline_end_to_end(spark, workbook_dir):
     assert rows["/A/f1.pdf"]["parent_id"] == "10"  # J1 resolved
     assert rows["/A/f1.pdf"]["job_name"] == "JobA"  # F3 from workbook name
     assert rows["/A/f1.pdf"]["level"] == 2
+
+
+def test_later_sheet_retry_wins_upsert(spark, workbook_dir):
+    """Last-write-wins follows arrival order: a key listed on "Transfer
+    Report 1" and again on "Transfer Report 2" keeps the later sheet's
+    row (the reference reads sheets in workbook order, :349-379)."""
+    out = ingest(read_transfer_reports(spark, workbook_dir))
+    f1 = out.filter(F.col("file_name") == "/A/f1.pdf").collect()
+    assert len(f1) == 1
+    assert f1[0]["file_status"] == "success"
 
 
 def test_extract_overview_sheet(spark, workbook_dir, tmp_path):
@@ -408,7 +433,8 @@ def test_extract_sheet_preserving_charts_and_media(tmp_path):
         assert "calcChain" not in ct
 
     # the artifact is still a readable workbook: our scan sees ONLY Overview
-    got = list(parse_xlsx_rows(open(out, "rb").read()))
+    with open(out, "rb") as fh:
+        got = list(parse_xlsx_rows(fh))
     assert [(s, i, c) for s, i, c in got] == [
         ("Overview", 0, ["Job", "Count"]),
         ("Overview", 1, ["alpha", "7"]),
@@ -454,36 +480,12 @@ def test_extract_sheet_preserving_handles_paired_sheet_elements(tmp_path):
         wb_out = zf.read("xl/workbook.xml").decode()
         assert wb_out.count("<sheet ") == 1
         assert 'name="Overview"' in wb_out and 'name="Data1"' not in wb_out
-    got = list(parse_xlsx_rows(open(out, "rb").read()))
+    with open(out, "rb") as fh:
+        got = list(parse_xlsx_rows(fh))
     assert [(s, i, c) for s, i, c in got] == [
         ("Overview", 0, ["Job"]),
         ("Overview", 1, ["alpha"]),
     ]
-
-
-def test_sheet_parallel_scan_matches_per_file_scan(spark, workbook_dir):
-    """The per-SHEET scan (one task per sheet — the 700 MB single-
-    workbook case) must produce EXACTLY the per-file scan's rows, honor
-    the sheet prefix and ~lock exclusion, and actually split tasks at
-    sheet granularity."""
-    from shuttlestandalonedbcreator_spark.sources.excel import (
-        read_workbook_rows_sheet_parallel,
-    )
-
-    per_file = read_workbook_rows(spark, workbook_dir, sheet_prefix="Transfer Report")
-    per_sheet = read_workbook_rows_sheet_parallel(
-        spark, workbook_dir, sheet_prefix="Transfer Report"
-    )
-    key = ["_source_file", "_sheet", "_row_index"]
-    assert sorted(map(tuple, per_file.select(*key, "_cells").collect())) == sorted(
-        map(tuple, per_sheet.select(*key, "_cells").collect())
-    )
-    # 3 matching sheets across 2 workbooks → 3 input partitions
-    assert per_sheet.rdd.getNumPartitions() == 3
-
-    # no matching sheets → empty frame with the same schema, no job blowup
-    none = read_workbook_rows_sheet_parallel(spark, workbook_dir, sheet_prefix="Nope")
-    assert none.count() == 0 and none.columns == per_file.columns
 
 
 def test_xlsx_python_datasource_write_roundtrip(spark, tmp_path):

@@ -189,9 +189,9 @@ def test_formatted_scan_renders_via_styles():
     from shuttlestandalonedbcreator_spark.sources.excel import parse_xlsx_rows
 
     data = _styled_workbook()
-    raw = list(parse_xlsx_rows(data))
+    raw = list(parse_xlsx_rows(io.BytesIO(data)))
     assert raw[0][2] == ["7.5", "0.42", "0.4256", "45123", "45123.5", "1", "txt"]
-    fmt = list(parse_xlsx_rows(data, formatted=True))
+    fmt = list(parse_xlsx_rows(io.BytesIO(data), formatted=True))
     assert fmt[0][2] == [
         "7.5",          # General
         "42%",          # builtin 9

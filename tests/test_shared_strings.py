@@ -4,9 +4,9 @@ write_workbook emits inline strings, so without these tests the sst
 branch of sources/excel.py would be covered only by the manual 700 MB
 rehearsal).
 
-Covers: sst index resolution across both scan granularities (per-file
-binaryFile and per-sheet ranged), rich-text runs (<r><t> fragments
-joined), xml:space-preserved whitespace, and the empty-<v> cell edge.
+Covers: sst index resolution through the distributed scan, rich-text
+runs (<r><t> fragments joined), xml:space-preserved whitespace, and the
+empty-<v> cell edge.
 """
 
 from __future__ import annotations
@@ -19,32 +19,26 @@ import pytest
 from shuttlestandalonedbcreator_spark.sources.excel import (
     parse_xlsx_rows,
     read_workbook_rows,
-    read_workbook_rows_sheet_parallel,
 )
 from tools.workbook700_bench import _unique_strings, generate
 
 _NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 
 
-def test_sst_workbook_scan_matches_on_both_granularities(spark, tmp_path):
+def test_sst_workbook_scan_resolves_shared_strings(spark, tmp_path):
     """The sst-referenced fixture from the capacity-rehearsal generator,
-    at toy size: the per-file and per-sheet scans must agree row for
-    row, and sst indices must resolve to the synthesized strings."""
+    at toy size: the scan must return every row of every sheet, and sst
+    indices must resolve to the synthesized strings."""
     src = tmp_path / "src"
     src.mkdir()
     generate(str(src / "r.xlsx"), rows_per_sheet=40, n_sheets=2)
 
-    per_file = read_workbook_rows(spark, str(src)).orderBy(
-        "_sheet", "_row_index"
-    ).collect()
-    per_sheet = read_workbook_rows_sheet_parallel(spark, str(src)).orderBy(
-        "_sheet", "_row_index"
-    ).collect()
-    assert len(per_file) == 2 * 41  # 40 rows + header per sheet
-    assert [tuple(r) for r in per_file] == [tuple(r) for r in per_sheet]
+    rows = read_workbook_rows(spark, str(src)).collect()
+    assert len(rows) == 2 * 41  # 40 rows + header per sheet
 
     # sst references resolved: row g of sheet s carries _unique_strings(g)
-    by_key = {(r["_sheet"], r["_row_index"]): r["_cells"] for r in per_file}
+    by_key = {(r["_sheet"], r["_row_index"]): r["_cells"] for r in rows}
+    assert len(by_key) == len(rows)  # one row per (sheet, row index)
     cells = by_key[("Transfer Report 2", 5)]  # g = 40 + 4
     path, checksum, name = _unique_strings(44)
     assert cells[0] == path
@@ -119,7 +113,7 @@ def test_rich_text_runs_whitespace_and_empty_v(tmp_path):
     p = str(tmp_path / "rich.xlsx")
     _mini_sst_workbook(p, sst, rows)
     with open(p, "rb") as f:
-        parsed = list(parse_xlsx_rows(f.read()))
+        parsed = list(parse_xlsx_rows(f))
     assert parsed == [("S", 0, ["Hello World", "  padded  ", ""])]
 
 
@@ -137,7 +131,7 @@ def test_missing_sst_part_tolerates_inline_only(tmp_path):
         for n, data in contents.items():
             zf.writestr(n, data)
     with open(p, "rb") as f:
-        parsed = list(parse_xlsx_rows(f.read()))
+        parsed = list(parse_xlsx_rows(f))
     assert parsed == [("S", 0, ["x"])]
 
 

@@ -5,9 +5,10 @@ proved nothing about the claims that live INSIDE the checkpointed jobs).
 
 Monkeypatches DataFrame.localCheckpoint to write each pre-checkpoint
 frame's .explain("formatted") into plans/<outdir>/<entry>_ckpt<i>.txt
-before delegating to the real checkpoint, then builds (and, with --run,
-executes) each named entry. Zero entry-code changes — the capture wraps
-the same functions the driver runs.
+before delegating to the real checkpoint, then builds each named entry
+(its eager checkpoints run during the build) and writes the final
+formatted plan to <entry>_final.txt. Zero entry-code changes — the
+capture wraps the same functions the driver runs.
 
 Usage: python tools/checkpoint_plans.py <outdir> <entry> [entry ...]
 """

@@ -4,28 +4,26 @@ exercised at its stated size.
 
 Streams ONE multi-sheet .xlsx of the requested size to disk (a REAL
 sharedStrings-based workbook, the layout POI writes: every string lives
-in xl/sharedStrings.xml and sheet cells are `t="s"` index references —
-so the sheet-parallel scan's documented trade-off, the per-sheet
-sharedStrings re-parse, is actually exercised), then runs the full
-reference pipeline on it:
+in xl/sharedStrings.xml and sheet cells are `t="s"` index references),
+then runs the full reference pipeline on it:
 
-    read_workbook_rows_sheet_parallel (one task per sheet)
+    read_transfer_reports (the per-file scan: one task opens the
+      workbook and streams its sheets)
       -> positional RAW_COLUMNS projection (S5 header skip)
       -> plans.transfer_pipeline.ingest (P1/F1-F4/A1/J1)
       -> partitioned parquet sink
 
 and prints one JSON line with file size, rows, wall clocks, rows/s,
-and peak driver/JVM RSS. The per-FILE scan (one task for the whole
-workbook — the reference's own single-thread shape) is timed on the
-same file for the sheet-parallel speedup ratio; pass --skip-serial to
-omit it (it dominates wall time at large sizes).
+and peak driver/JVM RSS. Set SPARK_DRIVER_MEMORY to check the memory
+bound: the JVM never holds workbook bytes, so the heap need not fit the
+workbook.
 
 Generation is O(chunk) memory: sheet XML and the sharedStrings part are
 streamed into the zip entry-by-entry; string indices are assigned
 arithmetically (fixed pool for repeated cells, per-row unique strings
 in row order) so no string table is ever held in memory.
 
-Usage: python tools/workbook700_bench.py [target_mb] [n_sheets] [--skip-serial]
+Usage: python tools/workbook700_bench.py [target_mb] [n_sheets]
 """
 
 from __future__ import annotations
@@ -280,19 +278,11 @@ def main() -> None:
 
     target_mb = int(sys.argv[1]) if len(sys.argv) > 1 else 700
     n_sheets = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-    skip_serial = "--skip-serial" in sys.argv
-    serial_only = "--serial-only" in sys.argv  # needs a big heap: the
-    # per-FILE scan holds the whole workbook as ONE binaryFile row
-    # (measured: a 705 MB file OOMs an 8g heap; set
-    # SPARK_DRIVER_MEMORY=24g for this mode)
 
     from shuttlestandalonedbcreator_spark.plans.sinks import write_transfer_table
     from shuttlestandalonedbcreator_spark.plans.transfer_pipeline import ingest
     from shuttlestandalonedbcreator_spark.session import get_spark
-    from shuttlestandalonedbcreator_spark.sources.excel import (
-        read_transfer_reports,
-        read_workbook_rows,
-    )
+    from shuttlestandalonedbcreator_spark.sources.excel import read_transfer_reports
 
     # calibrate rows/sheet from a small probe (bytes/row is stable)
     work = tempfile.mkdtemp(prefix="wb700_")
@@ -315,36 +305,14 @@ def main() -> None:
 
     spark = get_spark()
     try:
-        if serial_only:
-            t2 = time.time()
-            n = read_workbook_rows(spark, src).count()
-            serial_sec = round(time.time() - t2, 1)
-            print(json.dumps({
-                "metric": "workbook700_serial_scan_sec",
-                "value": serial_sec,
-                "file_mb": round(size / 1024 / 1024, 1),
-                "rows": n,
-                "scan_rows_per_sec": round(n / serial_sec, 1),
-                "jvm_peak_mb": _jvm_peak_mb(),
-            }))
-            return
-        # the PRODUCTION projection (read_transfer_reports), per-sheet
-        # parallel — the rehearsal measures exactly the pipeline users run
-        mapped = read_transfer_reports(spark, src, parallel=True)
+        # the PRODUCTION projection (read_transfer_reports) — the
+        # rehearsal measures exactly the pipeline users run
         t1 = time.time()
-        out = ingest(mapped, materialize=True)
+        out = ingest(read_transfer_reports(spark, src), materialize=True)
         write_transfer_table(out, os.path.join(work, "transfer"))
         n = spark.read.parquet(os.path.join(work, "transfer")).count()
         pipeline_sec = time.time() - t1
         print(f"pipeline done: {n} rows in {pipeline_sec:.0f}s", flush=True)
-
-        serial_sec = None
-        if not skip_serial:
-            print("serial per-file scan (one task, the reference's own "
-                  "single-thread shape)...", flush=True)
-            t2 = time.time()
-            read_workbook_rows(spark, src).count()
-            serial_sec = round(time.time() - t2, 1)
 
         print(json.dumps({
             "metric": "workbook700_rows_per_sec",
@@ -354,7 +322,6 @@ def main() -> None:
             "sheets": n_sheets,
             "gen_sec": round(gen_sec, 1),
             "pipeline_sec": round(pipeline_sec, 1),
-            "serial_scan_sec": serial_sec,
             "driver_peak_mb": round(
                 resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1
             ),
