@@ -127,8 +127,8 @@ def parse_xlsx_rows(
     formatted: bool = False,
 ) -> Iterator[tuple[str, int, list[str]]]:
     """Stream (sheet_name, row_index, cells) from a workbook, given as a
-    seekable binary file. zipfile reads the central
-    directory, the shared strings and only the matching sheet parts.
+    seekable binary file. zipfile reads the central directory, the shared
+    strings and only the matching sheet parts.
 
     Default: cells are the raw stored strings (numbers keep their
     serialized form, e.g. '45123.5') — the tolerant-cast layer downstream

@@ -58,6 +58,9 @@ def test_raw_scan_sheets_and_rows(spark, workbook_dir):
         ("JobA.xlsx", "Transfer Report 2"): 3,
         ("JobB.xlsx", "Transfer Report"): 2,
     }
+    # no matching sheet: an empty frame with the same columns
+    none = read_workbook_rows(spark, workbook_dir, sheet_prefix="Nope")
+    assert none.count() == 0 and none.columns == df.columns
 
 
 def test_scan_never_ships_workbook_bytes_through_the_jvm(spark, workbook_dir):
